@@ -125,7 +125,10 @@ MIN_TIMED_PASSES = 2
 # Self-test size: small enough that a pass is dominated by fixed overheads.
 TINY = gen.Size(customers=150, events=1000, documents=100, embeddings=100)
 
-END_TO_END = {"setup_s": "s", "first_pass_s": "s", "pass_s_p50": "s"}
+# first_pass_s is measured but not gated: it is one cold sample per JVM, and
+# ten-seed spreads of 13-26% on a 4-core shared host reach the largest
+# bound a gated metric may have (0.25). It is in every run record.
+END_TO_END = {"setup_s": "s", "pass_s_p50": "s"}
 
 
 def per_layer_units() -> dict[str, str]:
