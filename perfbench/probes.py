@@ -134,24 +134,27 @@ def host_steal_s() -> float:
     return int(fields[8]) / CLK_TCK
 
 
-def snapshot_files(roots: list[str]) -> dict[str, tuple[int, int]]:
-    """path -> (size, mtime_ns) for every file under the given roots."""
+def snapshot_files(root: str) -> dict[str, tuple[int, int]]:
+    """path -> (size, mtime_ns) for every parquet data file under root.
+    Checksum sidecars, _SUCCESS markers and commit logs are left out."""
     out: dict[str, tuple[int, int]] = {}
-    for root in roots:
-        for dirpath, _, files in os.walk(root):
-            for name in files:
-                p = os.path.join(dirpath, name)
-                try:
-                    st = os.stat(p)
-                except FileNotFoundError:
-                    continue
-                out[p] = (st.st_size, st.st_mtime_ns)
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".parquet"):
+                continue
+            p = os.path.join(dirpath, name)
+            try:
+                st = os.stat(p)
+            except FileNotFoundError:
+                continue
+            out[p] = (st.st_size, st.st_mtime_ns)
     return out
 
 
 def written_between(
     before: dict[str, tuple[int, int]], after: dict[str, tuple[int, int]]
 ) -> tuple[int, int]:
-    """(files, bytes) present after a call that are new or rewritten."""
+    """(files, bytes) of parquet data present after a call that are new or
+    rewritten."""
     new = [v for p, v in after.items() if before.get(p) != v]
     return len(new), sum(size for size, _ in new)

@@ -84,14 +84,10 @@ LAKE_MODULES = ("sinks", "lakehouse")
 
 @dataclass(frozen=True)
 class Workload:
-    queries: tuple[str, ...]
+    queries: tuple[str, ...]  # run in a seed-shuffled order in every pass
     size: gen.Size
-    shuffled: bool  # seed-shuffled query order in every pass
     tables: tuple[str, ...]  # resolved during set-up
     warmup: int  # untimed passes between the first pass and the timed ones
-    # Timed passes = ceil(seconds / nominal_pass_s): a constant, so the count
-    # depends on --seconds and never on how fast the host happens to be.
-    nominal_pass_s: float
 
 
 WORKLOADS = {
@@ -100,11 +96,9 @@ WORKLOADS = {
     "itemcf_batch": Workload(
         queries=("q_cf_recommend",),
         size=gen.Size(customers=1500, events=1000, documents=100, embeddings=100),
-        shuffled=False,
         tables=("orders", "lineitem"),
         # Passes keep getting faster until about the fifth.
         warmup=3,
-        nominal_pass_s=5.0,
     ),
     # Interactive notebook traffic, one query per operator family, mixed
     # with the write paths that end in parquet writes and commits. The CF
@@ -112,16 +106,22 @@ WORKLOADS = {
     "operator_lake_mix": Workload(
         queries=MIX + LAKE,
         size=gen.Size(customers=3000, events=20000, documents=1000, embeddings=1000),
-        shuffled=True,
         tables=(
             "region", "nation", "customer", "supplier", "part", "orders",
             "lineitem", "events", "documents", "embeddings",
         ),
-        warmup=0,
-        nominal_pass_s=9.0,
+        # The second pass is still 2-18% slower than the third.
+        warmup=1,
     ),
 }
-MIN_TIMED_PASSES = 2
+
+
+def timed_passes(seconds: int) -> int:
+    """One timed pass per 5 s of --seconds, at least two. The count depends
+    on --seconds alone, never on how fast the host happens to be."""
+    return max(2, math.ceil(seconds / 5))
+
+
 # Self-test size: small enough that a pass is dominated by fixed overheads.
 TINY = gen.Size(customers=150, events=1000, documents=100, embeddings=100)
 
@@ -265,8 +265,7 @@ class Run:
 
     def order(self) -> list[str]:
         qs = list(self.wl.queries)
-        if self.wl.shuffled:
-            self.rng.shuffle(qs)
+        self.rng.shuffle(qs)
         return qs
 
     # -- untraced pass ----------------------------------------------------
@@ -377,20 +376,19 @@ class Run:
 
     def traced_lake(self, name: str, m: dict[str, float], io: list[int]) -> None:
         """write span (the eager q_* call) and read span (toPandas) of one
-        write-path query. Files and bytes come from walking the output
-        directories around the write."""
-        from recsys_spark_spark import lakehouse, sinks
+        write-path query. Parquet files and bytes come from walking the
+        output directory around the write."""
+        from recsys_spark_spark import sinks
 
         span, last = self.tracer.span, self.tracer.last
         mod = self.queries[name].__module__.removeprefix("recsys_spark_spark.")
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        roots = sorted({sinks.TMP_DIR, lakehouse.TMP_DIR, warehouse})
         pdf = None
-        before = probes.snapshot_files(roots)
+        # sinks and lakehouse write under the same .tmp/ root.
+        before = probes.snapshot_files(sinks.TMP_DIR)
         try:
             with span("lake.write"):
                 df = self.queries[name](self.spark, self.data_dir)
-            files, nbytes = probes.written_between(before, probes.snapshot_files(roots))
+            files, nbytes = probes.written_between(before, probes.snapshot_files(sinks.TMP_DIR))
             with span("lake.read"):
                 pdf = df.toPandas()
         except Exception:
@@ -435,7 +433,7 @@ def measure(run: Run, seed: int, seconds: int, trace: bool) -> tuple[dict, dict]
     stages = probes.StageReader(run.spark)
     for _ in range(run.wl.warmup):
         run.untraced_pass(checked=False, stages=stages)
-    n_timed = max(MIN_TIMED_PASSES, math.ceil(seconds / run.wl.nominal_pass_s))
+    n_timed = timed_passes(seconds)
     steal0, t0 = probes.host_steal_s(), time.perf_counter()
     timed = [run.untraced_pass(checked=True, stages=stages) for _ in range(n_timed)]
     steal = (probes.host_steal_s() - steal0) / ((time.perf_counter() - t0) * host_cpus)
