@@ -128,24 +128,24 @@ def capped_interactions(spark: SparkSession, sf_dir: str, cap: int = MAX_USER_HI
 # bench.py's clearCache before every timed sample forces a full recompute
 # inside the timed action, so nothing is amortized across bench runs).
 # q_cf_recommend itself deliberately does NOT consume the memo: its
-# two-exchange plan is digest-pinned (tests/test_plans.py) and it is the
-# driver's headline query — its declared plan stays byte-identical.
+# two-exchange plan is pinned (tests/test_plans.py) and it is the headline
+# query. Both call the one unmemoized _flagship_chain, so they cannot drift.
 _RECS: dict[tuple[str, str], DataFrame] = {}
+
+
+def _flagship_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship builder chain: capped matrix → item norms → fused
+    count/cosine/top-K neighbors → scoring/top-N."""
+    ui = capped_interactions(spark, sf_dir)
+    neighbors = topk_neighbors_fused(ui, item_norms(ui)).select("item_i", "item_j", "sim")
+    return recommend(ui, neighbors)
 
 
 def flagship_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship top-5 recommendation frame, memo-persisted per session
-    for its downstream consumers (novelty, hybrid). Same rows as
-    q_cf_recommend by construction — it IS the same builder chain."""
-    def build() -> DataFrame:
-        ui = capped_interactions(spark, sf_dir)
-        neighbors = topk_neighbors_fused(ui, item_norms(ui)).select(
-            "item_i", "item_j", "sim"
-        )
-        return recommend(ui, neighbors)
-
+    for its downstream consumers (novelty, hybrid)."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    return memo_persist(_RECS, key, build)
+    return memo_persist(_RECS, key, lambda: _flagship_chain(spark, sf_dir))
 
 
 def audience_capped(ui: DataFrame, cap: int = MAX_ITEM_AUDIENCE) -> DataFrame:
@@ -577,9 +577,7 @@ def q_cf_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     base join+agg runs once per action instead of four times — the single
     biggest win at every scale (at 100 TB: MEMORY_AND_DISK or a parquet
     checkpoint)."""
-    ui = capped_interactions(spark, sf_dir)
-    neighbors = topk_neighbors_fused(ui, item_norms(ui)).select("item_i", "item_j", "sim")
-    return recommend(ui, neighbors)
+    return _flagship_chain(spark, sf_dir)
 
 
 def topk_user_neighbors(ui: DataFrame, k: int = TOP_K_NEIGHBORS) -> DataFrame:

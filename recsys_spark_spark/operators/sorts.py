@@ -176,7 +176,12 @@ def value_buckets(
     prefix max): boundary placement only moves rows BETWEEN buckets, each
     bucket still holds all rows of a contiguous value range and ties share
     a bucket, so per-bucket computation + cross-bucket combination is exact
-    for any boundary set."""
+    for any boundary set.
+
+    One bucket (a one-thread session) asks for no percentiles, and
+    percentile_approx answers an empty list with a NULL boundary array. It
+    is read as the empty boundary set: none in front of any row, so every
+    non-null row lands in bucket 0."""
     nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pcts = [i / nb for i in range(1, nb)]
     v = F.col(value_col)
@@ -187,7 +192,7 @@ def value_buckets(
         .withColumn(
             "_bkt",
             F.when(v.isNull(), F.lit(nb)).otherwise(  # NULLS LAST
-                F.size(F.filter("_bounds", in_front))
+                F.size(F.filter(F.coalesce("_bounds", F.array()), in_front))
             ),
         )
         .drop("_bounds")

@@ -1,8 +1,22 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Local test/bench sessions keep shuffle.partitions low (local-mode overhead
-dominates at sf<=0.1); on a real cluster the same code runs with the
-cluster-provided session — query code never assumes a specific parallelism.
+Shuffle width rule: unless the caller pins ``shuffle_partitions``, every
+shuffle is exactly one wave wide — ``spark.sql.shuffle.partitions`` is the
+session's resolved task-thread count (``sparkContext.defaultParallelism``),
+and AQE only ever coalesces below it. A wave is one round of tasks with one
+task per task thread. Persisted frames keep the width they were built with
+(AQE does not coalesce a cached plan's output), so at a fixed width of 32 on
+3 task threads every stage that scans the cached CF interaction matrix ran
+32 tiny tasks — about 11 waves of per-task overhead for work one wave holds.
+Exactly one wave, not a multiple of it: with more partitions than threads
+AQE may coalesce a shuffle to a count that is not a whole wave, and a lone
+extra task then runs in a second wave. On perfbench itemcf_batch (3 task
+threads, 4-CPU host, seeds 61-67) the pass median was 3.27 s at width 3,
+3.72 s at 6 (two waves) and 4.71 s at 32; one wave beat two on 6 of 7
+seeds. An earlier set saw 6 barely ahead of 32 (4.07-4.33 s against
+4.27-4.93 s; 3.05-3.40 s at 3), when AQE coalesced the pair shuffle to 4
+partitions on 3 threads. On a real cluster the same code runs with the
+cluster-provided session; query code never assumes a specific parallelism.
 """
 
 from __future__ import annotations
@@ -19,7 +33,6 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "*")
-    sp = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -28,7 +41,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(sp))
         # Arrow for all Python<->JVM data transfer (toPandas, pandas_udf).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic timestamp semantics vs the DuckDB oracle.
@@ -80,4 +92,8 @@ def get_spark(
                 f"{got!r}); a pre-existing SparkSession was reused — stop it "
                 "first or pass the conf when the FIRST session is created"
             )
+    # One wave (module docstring); the thread count is only known once the
+    # context exists, and shuffle width is a runtime SQL conf.
+    width = shuffle_partitions or spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     return spark

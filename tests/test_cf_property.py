@@ -389,3 +389,15 @@ def test_cap_guard_catches_saturated_data(spark, tmp_path):
     for t in ("orders", "lineitem"):
         con2.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet'")
     mod._assert_cap_properties(con2, str(tmp_path))
+
+
+def test_flagship_recs_equals_q_cf_recommend(spark):
+    """flagship_recs (the memoized frame novelty and hybrid read) must give
+    exactly the flagship's rows: both call itemcf._flagship_chain."""
+    from recsys_spark_spark.registry import load_all
+    from tests.conftest import SF_SMOKE
+
+    QUERIES, _ = load_all()
+    want = QUERIES["q_cf_recommend"](spark, SF_SMOKE).collect()
+    got = itemcf.flagship_recs(spark, SF_SMOKE).collect()
+    assert want and sorted(got) == sorted(want)
